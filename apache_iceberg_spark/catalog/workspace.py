@@ -1,129 +1,81 @@
 """Workspace-level multi-table commits — the documented Nessie property
-the per-table snapshot log cannot express (VERDICT r9 ask #2).
+the per-table snapshot log cannot express.
 
 Nessie commits are CATALOG-level: one commit can change several tables
 atomically, so a reader at any ref sees all of a publish or none of it
 ("transactions across tables" — the point of a catalog-level version
 store; endpoint matrix at blog-zero-cost-data-lakehouse.md:373-397).
-``catalog/snapshots.py``'s emulation keeps ``_versions.json`` inside ONE
-table path, so a two-table publish there is two separate commits with a
-torn window where readers see one but not the other.
+A table's own log keeps ``_versions.json`` inside ONE table path, so a
+two-table publish there is two separate commits with a torn window
+where readers see one but not the other.
 
 This module lifts the same commit-log design one level up:
 
     <workspace>/
-      _versions.json     # ONE log for ALL tables: [{version, ts_ms,
-                         #   parent, tables: {name: {"adds": [...]}
-                         #                        | {"set": [...]}}}]
-      _refs.json         # workspace-level branches/tags (same shape as
-                         #   the table-level refs — and like Nessie's,
-                         #   a workspace BRANCH spans every table)
+      _versions.json     # ONE log for ALL tables (base array, plus the
+      _versions.jsonl    #   append segment): [{version, ts_ms, parent,
+                         #   tables: {name: {"adds": [...]}
+                         #                | {"set": [...]}}}]
+      _refs.json         # workspace-level branches/tags + key index —
+                         #   the table-level shape; like Nessie's, a
+                         #   workspace BRANCH spans every table
       <table>/w{N}-<tok>/  # immutable data dirs, one per table per commit
 
-A commit entry names only the tables it TOUCHED, each as a delta
-(``adds``) or a restatement (``set``) — the same O(commits) metadata
-discipline the table-level log adopted in round 10 — and records its
-``parent`` workspace version, so history is a TREE: resolving table T at
-version V walks V's parent chain collecting adds until a set. Readers
-of one version therefore see every table exactly as that single commit
-left the workspace — both tables of a publish, or neither — and a
-branch isolates multi-table work-in-progress until one merge publishes
-ALL of it (the catalog-level branch-WAP m36 oracle-checks; m30 is the
-same workflow one table at a time).
+``catalog/snapshots.py`` owns the version-log protocol for both layers,
+and this module calls it with the workspace path: the base + append-
+segment log and its ``O_EXCL`` lock, ``_refs.json`` I/O, ref resolution
+and branch/tag CRUD, the one lineage walk and merge-base rule, the
+commit critical section (head + branch CAS, pointer move, idempotency-
+key index) and its retry loop, the idempotency lookup, ref protection,
+the expiry core and the orphan reconcile step. ``CommitConflict`` is one
+conflict type across both layers.
 
-The commit point is the identical CAS: data dirs first (uniquely named),
-then verify-head + append + atomic rename under the ``O_EXCL`` lock, so
-a lost race raises ``CommitConflict`` (imported from snapshots — one
-conflict type across both layers); branch pointers move inside the same
-critical section (the round-10 refs-clobber lesson).
+What this module adds is what is multi-table. A commit entry names only
+the tables it TOUCHED, each as a delta (``adds``) or a restatement
+(``set``) — O(commits) metadata — and records its ``parent`` workspace
+version, so history is a TREE: resolving table T at version V walks V's
+lineage collecting adds until a set. Readers of one version therefore
+see every table exactly as that single commit left the workspace — both
+tables of a publish, or neither — and a branch isolates multi-table
+work-in-progress until one merge publishes ALL of it (the catalog-level
+branch-WAP m36 oracle-checks; m30 is the same workflow one table at a
+time). On top of that resolution sit the recorded layouts, named views,
+table rename, and the per-table content rules of merge, transplant and
+rollback; their commits go through the shared critical section.
 """
 
 from __future__ import annotations
 
-import json
 import os
+import re
 import time
 
 from pyspark.sql import DataFrame, SparkSession
 
 from apache_iceberg_spark.catalog.snapshots import (
     CommitConflict,
-    _MISSING,
-    _append_entry,
+    _add_ref,
+    _ancestry,
+    _append_commit,
+    _branch_head,
+    _commit_locked,
     _data_dir,
+    _ensure_main,
+    _expire,
+    _find_idempotent,
     _locked_state,
     _log_lock,
-    _prune_keys,
+    _merge_base,
     _read_log,
-    _read_tail,
-    _state_ancestry,
-    _state_parent,
-    _touch_lock,
-    _write_log,
+    _read_refs,
+    _remove_orphans,
+    _resolve_ref as ws_resolve_ref,
+    _retry_conflicts,
+    _write_refs,
     compact_log as ws_compact_log,  # same file layout, one implementation
+    create_branch,
+    delete_branch,
 )
-
-_LOG = "_versions.json"
-_REFS = "_refs.json"
-
-# The commit log is the SAME base-array + append-segment layout as the
-# table-level store (snapshots.py round 11): a workspace commit appends
-# ONE JSONL line — O(entry bytes) per commit instead of rewriting the
-# whole log (O(commits²) cumulative at streaming cadence, the st19/st20
-# shape; VERDICT r10 ask #1). `_read_log`/`_write_log`/`_append_entry`/
-# `ws_compact_log` are imported from snapshots.py — one implementation,
-# both layers.
-
-
-def _read_refs(ws_path: str) -> dict:
-    try:
-        with open(os.path.join(ws_path, _REFS)) as f:
-            return json.load(f)
-    except FileNotFoundError:
-        return {"branches": {}, "tags": {}}
-
-
-def _write_refs(ws_path: str, refs: dict) -> None:
-    tmp = os.path.join(ws_path, _REFS + ".tmp")
-    with open(tmp, "w") as f:
-        json.dump(refs, f)
-    os.replace(tmp, os.path.join(ws_path, _REFS))
-
-
-def _parent_of(by_v: dict[int, dict], v: int) -> int | None:
-    """One ancestry step: recorded ``parent``, or (for entries predating
-    parent recording) the implicit previous log version — the same
-    unified rule as the table-level store. ``root`` entries (expiry
-    materialized them) are explicit chain ends (ADVICE r10: the
-    implicit fallback walked them into foreign lineages)."""
-    entry = by_v[v]
-    if entry.get("root"):
-        return None
-    if "parent" in entry:
-        return entry["parent"]
-    prior = [x for x in by_v if x < v]
-    return max(prior) if prior else None
-
-
-def _chain(by_v: dict[int, dict], head: int) -> list[int]:
-    """``head`` and every ancestor, nearest first (bisect for the
-    implicit-parent steps — O(n log n) on legacy linear logs)."""
-    import bisect
-
-    sorted_vs = sorted(by_v)
-    out: list[int] = []
-    v: int | None = head
-    while v is not None and v in by_v:
-        out.append(v)
-        entry = by_v[v]
-        if entry.get("root"):
-            v = None  # explicit end-of-chain (expiry-materialized)
-        elif "parent" in entry:
-            v = entry["parent"]
-        else:
-            i = bisect.bisect_left(sorted_vs, v)
-            v = sorted_vs[i - 1] if i > 0 else None
-    return out
 
 
 def _resolve_table(
@@ -144,7 +96,7 @@ def _resolve_table(
             f"version {version} not found (have {sorted(by_v)})"
         )
     chain: list[list[str]] = []
-    for v in _chain(by_v, version):
+    for v in _ancestry(by_v, version):
         t = by_v[v]["tables"].get(table)
         if t is None:
             continue
@@ -169,60 +121,11 @@ def _table_layout(by_v: dict[int, dict], version: int, table: str):
     """The most recently recorded ``partition_by`` for ``table`` along
     ``version``'s lineage; the sentinel ``"unknown"`` when no touching
     entry recorded one (pre-validation commits)."""
-    for v in _chain(by_v, version):
+    for v in _ancestry(by_v, version):
         t = by_v[v]["tables"].get(table)
-        if t is None:
-            continue
-        if "partition_by" in t:
-            return t["partition_by"]
-        return "unknown"
+        if t is not None:
+            return t.get("partition_by", "unknown")
     return "unknown"
-
-
-def _ensure_main(ws_path: str, refs: dict, log: list[dict]) -> dict:
-    if "main" not in refs["branches"]:
-        if not log:
-            raise ValueError(f"no commits at {ws_path}")
-        refs["branches"]["main"] = log[-1]["version"]
-    return refs
-
-
-def _ws_find_idempotent(
-    ws_path: str,
-    refs: dict,
-    branch: str,
-    parent_v: int | None,
-    key: str,
-) -> int | None:
-    """O(1) indexed idempotency lookup, workspace flavor — same contract
-    as the table-level ``_find_idempotent`` (VERDICT r10 ask #4): map
-    probe first (a fully-indexed MISS never touches the log state),
-    ancestry-verify on the rare hit, chain walk only for history below
-    ``keys_floor`` (pre-index commits; fresh workspaces have floor 0, so
-    a new stream's per-batch miss check never walks)."""
-    if parent_v is None:
-        return None
-    mk = f"{branch}\x00{key}"
-    hit = refs.get("keys", {}).get(mk)
-    floor = refs.get("keys_floor")
-    if hit is None and floor is not None and floor <= 0:
-        return None
-    with _locked_state(ws_path) as st:
-        ancestry: list[int] | None = None
-        if hit is not None and hit in st.by_v:
-            ancestry = _state_ancestry(st, parent_v)
-            if hit in ancestry:
-                return hit
-        if floor is not None and floor <= 0:
-            return None
-        if ancestry is None:
-            ancestry = _state_ancestry(st, parent_v)
-        for v in ancestry:
-            if floor is not None and v > floor:
-                continue
-            if st.by_v[v].get("idempotency_key") == key:
-                return v
-    return None
 
 
 def _ws_first_touch(st, table: str, version: int | None):
@@ -235,13 +138,11 @@ def _ws_first_touch(st, table: str, version: int | None):
     caller's own rule), so any touch that is not an empty set means the
     table exists. Runs on the shared cached state: call under
     ``_locked_state``."""
-    v = version
-    while v is not None and v in st.by_v:
+    for v in _ancestry(st.by_v, version):
         t = st.by_v[v]["tables"].get(table)
         if t is not None:
             exists = bool(t["set"]) if "set" in t else True
             return exists, t.get("partition_by", "unknown")
-        v = _state_parent(st, v)
     return False, "unknown"
 
 
@@ -272,28 +173,27 @@ def ws_commit(
     until ``ws_merge_branch`` publishes the WHOLE branch — multi-table
     ingest with one atomic go-live (m36).
 
-    All data directories are written BEFORE the log swap; the swap is a
-    CAS (raises ``CommitConflict`` on a lost race) and the branch
-    pointer moves inside the same critical section, so a crash or lost
-    race leaves only uniquely-named orphan dirs, never a half-visible
-    publish.
+    All data directories are written BEFORE the log swap; the swap is
+    the shared CAS (``_append_commit``: raises ``CommitConflict`` on a
+    lost race) and the branch pointer moves inside the same critical
+    section, so a crash or lost race leaves only uniquely-named orphan
+    dirs, never a half-visible publish.
 
     ``idempotency_key``: the same retry contract as the table-level
     ``commit_append_ref`` — a commit on this branch's lineage bearing
     the same key returns the original version without writing, so a
     streaming foreachBatch publisher passing the batch id gets
     exactly-once multi-table publishes across Spark's batch re-runs
-    (st20). The check is an O(1) indexed lookup (VERDICT r10 ask #4).
+    (st20). The check is the shared O(1) indexed lookup.
 
     ``max_retries``: retries a LOST CAS race here instead of raising
-    ``CommitConflict`` (VERDICT r10 ask #2). The data directories — the
-    expensive Spark jobs — are written ONCE and reused; each retry
-    re-plans metadata only (parent/head, idempotency, layout, and the
-    set-vs-adds shape, since a racer may have created a table this
-    commit also touches) and re-attempts the swap after a jittered
-    backoff. Two concurrent st20-style streams publishing to one
-    workspace therefore both land, instead of one thrashing through
-    orphaned rewrites.
+    ``CommitConflict``. The data directories — the expensive Spark jobs
+    — are written ONCE and reused; each retry re-plans metadata only
+    (parent/head, idempotency, layout, and the set-vs-adds shape, since
+    a racer may have created a table this commit also touches) and
+    re-attempts the swap after a jittered backoff. Two concurrent
+    st20-style streams publishing to one workspace therefore both land,
+    instead of one thrashing through orphaned rewrites.
 
     ``keys_max``: bound the idempotency index to the newest N keyed
     commits — the O(1)-refs knob for unexpiring keyed streams (a replay
@@ -308,16 +208,15 @@ def ws_commit(
     existence/layout checks read through the incremental log cache
     (first-touch lineage walks, one step for a table committed every
     micro-batch), and a fully-indexed idempotency miss is one dict
-    probe (VERDICT r11 ask #1)."""
-    import random
-
+    probe."""
     if mode not in ("append", "overwrite"):
         raise ValueError(f"unknown mode {mode!r}")
     if not dfs:
         raise ValueError("ws_commit needs at least one table")
     os.makedirs(ws_path, exist_ok=True)
     written: dict[str, str] = {}  # table -> data dir, written ONCE
-    for attempt in range(max_retries + 1):
+
+    def attempt() -> int:
         refs = _read_refs(ws_path)
         if branch in refs["tags"]:
             raise ValueError(f"cannot commit to tag {branch!r}")
@@ -330,15 +229,10 @@ def ws_commit(
             else:
                 parent_v = refs["branches"][branch]
             touch = {
-                name: (
-                    _ws_first_touch(st, name, parent_v)
-                    if parent_v is not None
-                    else (False, "unknown")
-                )
-                for name in dfs
+                name: _ws_first_touch(st, name, parent_v) for name in dfs
             }
         if idempotency_key is not None:
-            found = _ws_find_idempotent(
+            found = _find_idempotent(
                 ws_path, refs, branch, parent_v, idempotency_key
             )
             if found is not None:
@@ -350,8 +244,8 @@ def ws_commit(
             exists, recorded = touch[name]
             if exists and mode != "overwrite":
                 # Layout validation at commit time, the table-level
-                # store's ADVICE-r9 rule lifted here: a mis-partitioned
-                # append poisons every later multi-dir read.
+                # store's rule lifted here: a mis-partitioned append
+                # poisons every later multi-dir read.
                 if recorded != "unknown" and (recorded or None) != (pby or None):
                     raise ValueError(
                         f"partition_by={pby!r} for table {name!r} does "
@@ -375,77 +269,26 @@ def ws_commit(
                 tables[name] = {"set": [written[name]], "partition_by": pby}
             else:
                 tables[name] = {"adds": [written[name]], "partition_by": pby}
-        try:
-            with _log_lock(ws_path):
-                tail = _read_tail(ws_path)
-                cur_head = tail["version"] if tail else None
-                if cur_head != head:
-                    raise CommitConflict(
-                        f"workspace {ws_path} head moved {head} -> "
-                        f"{cur_head} during commit of v{version}; "
-                        "re-read and retry"
-                    )
-                cur_refs = _read_refs(ws_path)
-                # A branch pointer can move WITHOUT a log append (a
-                # fast-forward ws_merge_branch is a pure pointer move),
-                # which the head CAS cannot see — a commit planned
-                # before such a merge would silently revert it (ADVICE
-                # r10, medium). Re-verify the pointer in-section. A
-                # MISSING branch is a concurrent ws_delete_branch — a
-                # conflict, not a silent branch re-creation (ADVICE r11,
-                # low); missing "main" is the lazy-pin case (main is
-                # undeletable) and passes.
-                cur = cur_refs["branches"].get(branch, _MISSING)
-                if cur is _MISSING and branch != "main":
-                    raise CommitConflict(
-                        f"branch {branch!r} at {ws_path} was deleted "
-                        f"during commit of v{version}; re-read and retry"
-                    )
-                if cur is not _MISSING and cur != parent_v:
-                    raise CommitConflict(
-                        f"branch {branch!r} at {ws_path} moved "
-                        f"{parent_v} -> "
-                        f"{cur_refs['branches'].get(branch)} during "
-                        f"commit of v{version}; re-read and retry"
-                    )
-                entry = {
-                    "version": version,
-                    "ts_ms": (
-                        int(time.time() * 1000) if ts_ms is None else ts_ms
-                    ),
-                    "tables": tables,
-                }
-                if parent_v is not None:
-                    entry["parent"] = parent_v
-                if idempotency_key is not None:
-                    entry["idempotency_key"] = idempotency_key
-                _append_entry(ws_path, entry)
-                cur_refs["branches"][branch] = version
-                if idempotency_key is not None:
-                    if "keys_floor" not in cur_refs:
-                        # Same one-shot legacy scan as the table level:
-                        # floor 0 (pure O(1) misses) unless some
-                        # pre-index commit carries an unindexed key.
-                        legacy_keyed = any(
-                            "idempotency_key" in e
-                            and e["version"] != version
-                            for e in _read_log(ws_path)
-                        )
-                        cur_refs["keys_floor"] = (
-                            head if legacy_keyed and head is not None
-                            else 0
-                        )
-                    cur_refs.setdefault("keys", {})[
-                        f"{branch}\x00{idempotency_key}"
-                    ] = version
-                    _prune_keys(cur_refs, keys_max)
-                _write_refs(ws_path, cur_refs)
-            return version
-        except CommitConflict:
-            if attempt >= max_retries:
-                raise
-            time.sleep(random.uniform(0.01, 0.05) * (attempt + 1))
-    raise AssertionError("unreachable")
+        entry = {
+            "version": version,
+            "ts_ms": int(time.time() * 1000) if ts_ms is None else ts_ms,
+            "tables": tables,
+        }
+        if parent_v is not None:
+            entry["parent"] = parent_v
+        if idempotency_key is not None:
+            entry["idempotency_key"] = idempotency_key
+        _append_commit(
+            ws_path,
+            entry,
+            expected_head=head,
+            move_branch=branch,
+            expected_branch_v=parent_v,
+            keys_max=keys_max,
+        )
+        return version
+
+    return _retry_conflicts(max_retries, attempt)
 
 
 def ws_read(
@@ -467,7 +310,7 @@ def ws_read(
         version = ws_resolve_ref(ws_path, ref)
     log = _read_log(ws_path)
     if not log:
-        raise ValueError(f"no commits at {ws_path}")
+        raise ValueError(f"no snapshots at {ws_path}")
     if version is None and "main" in _read_refs(ws_path)["branches"]:
         version = ws_resolve_ref(ws_path, "main")
     paths = _resolve_table(log, table, version)
@@ -478,19 +321,19 @@ def ws_read(
 
 
 def ws_read_at(spark: SparkSession, ws_path: str, name: str) -> DataFrame:
-    """Workspace flavor of the ``table@ref`` sugar (VERDICT r11 ask #5):
+    """Workspace flavor of the ``table@ref`` sugar:
     ``ws_read_at(spark, ws, "sales@etl")`` reads table ``sales`` at the
     workspace branch/tag ``etl``; a bare name reads main — Nessie's
     reference syntax, where the ref scopes the whole catalog so two
     reads at one ref are mutually consistent.
 
-    VIEWS resolve through the same address (round 15, VERDICT r14 ask
-    #6): ``high_value@audit`` executes the view's SQL as stored AT that
-    ref against the tables AS OF that ref — the documented Nessie
-    views+branches matrix (blog-zero-cost-data-lakehouse.md:345-397),
-    where a ref scopes view text, table set, and table contents
-    together. Tables win a (disallowed but legacy-possible) name
-    collision, matching ws_create_view's namespace rule."""
+    VIEWS resolve through the same address: ``high_value@audit`` executes
+    the view's SQL as stored AT that ref against the tables AS OF that ref
+    — the documented Nessie views+branches matrix
+    (blog-zero-cost-data-lakehouse.md:345-397), where a ref scopes view
+    text, table set, and table contents together. Tables win a (disallowed
+    but legacy-possible) name collision, matching ws_create_view's
+    namespace rule."""
     from apache_iceberg_spark.catalog.snapshots import parse_at_ref
 
     table, ref = parse_at_ref(name)
@@ -550,20 +393,6 @@ def ws_list_tables(ws_path: str, version: int | None = None) -> list[str]:
     )
 
 
-def ws_resolve_ref(ws_path: str, ref: str) -> int:
-    refs = _read_refs(ws_path)
-    if ref in refs["tags"]:
-        return refs["tags"][ref]
-    if ref in refs["branches"]:
-        return refs["branches"][ref]
-    if ref == "main":
-        log = _read_log(ws_path)
-        if not log:
-            raise ValueError(f"no commits at {ws_path}")
-        return log[-1]["version"]
-    raise ValueError(f"unknown ref {ref!r} at {ws_path}")
-
-
 def ws_create_tag(ws_path: str, name: str, version: int | None = None) -> int:
     """Pin a workspace version under a name — because the version spans
     EVERY table, the tag is a consistent cross-table snapshot ('the
@@ -571,18 +400,12 @@ def ws_create_tag(ws_path: str, name: str, version: int | None = None) -> int:
     promise."""
     log = _read_log(ws_path)
     if not log:
-        raise ValueError(f"no commits at {ws_path}")
+        raise ValueError(f"no snapshots at {ws_path}")
     if version is None:
         version = ws_resolve_ref(ws_path, "main")
     elif version not in {e["version"] for e in log}:
         raise ValueError(f"version {version} not found")
-    with _log_lock(ws_path):
-        refs = _read_refs(ws_path)
-        if name in refs["tags"] or name in refs["branches"]:
-            raise ValueError(f"ref {name!r} already exists")
-        refs["tags"][name] = version
-        _write_refs(ws_path, refs)
-    return version
+    return _add_ref(ws_path, "tags", name, version)
 
 
 def ws_create_branch(
@@ -592,29 +415,14 @@ def ws_create_branch(
     model (a branch of the catalog, not of one table): multi-table
     work-in-progress accumulates on it invisibly to main until one
     merge publishes everything."""
-    version = ws_resolve_ref(ws_path, from_ref)
-    log = _read_log(ws_path)
-    with _log_lock(ws_path):
-        refs = _ensure_main(ws_path, _read_refs(ws_path), log)
-        if name in refs["branches"] or name in refs["tags"]:
-            raise ValueError(f"ref {name!r} already exists")
-        refs["branches"][name] = version
-        _write_refs(ws_path, refs)
-    return version
+    return create_branch(ws_path, name, from_ref)
 
 
 def ws_delete_branch(ws_path: str, name: str) -> None:
     """Abandon a workspace branch: one ref deletion — the reject path of
     the multi-table WAP, costing zero data operations for ANY number of
     staged tables."""
-    if name == "main":
-        raise ValueError("cannot delete main")
-    with _log_lock(ws_path):
-        refs = _read_refs(ws_path)
-        if name not in refs["branches"]:
-            raise ValueError(f"unknown branch {name!r}")
-        del refs["branches"][name]
-        _write_refs(ws_path, refs)
+    delete_branch(ws_path, name)
 
 
 def ws_merge_branch(
@@ -623,8 +431,8 @@ def ws_merge_branch(
     """Publish branch ``src`` into ``into`` — ATOMICALLY for every table
     the branch touched, which is the whole point of catalog-level
     branches: a reader of ``into`` sees all the branch's tables move in
-    one version hop, or none. Three regimes, mirroring the table-level
-    ``merge_branch``:
+    one version hop, or none. Three regimes, decided by the same
+    merge-base rule as the table-level ``merge_branch``:
 
     - no-op when ``src`` is already an ancestor of (or equal to) ``into``;
     - FAST-FORWARD as a pure pointer advance when ``into`` did not move
@@ -632,33 +440,29 @@ def ws_merge_branch(
     - diverged: a table only ONE side touched replays that side's
       change wholesale — additions as a delta, a rewrite or creation
       as a restatement (unambiguous, since the other side never moved
-      it; ADVICE r10 closed the gap where a one-sided rewrite was
-      wrongly flagged); a table BOTH sides touched merges when both
-      only ADDED files since the merge base (concurrent ingest), and
-      raises naming the conflicting tables when either side rewrote."""
+      it); a table BOTH sides touched merges when both only ADDED files
+      since the merge base (concurrent ingest), and raises naming the
+      conflicting tables when either side rewrote."""
     with _log_lock(ws_path):
         # Everything (reads included) inside the critical section: the
         # merge is pure metadata, and appending to a log read OUTSIDE
         # the lock would drop a commit that landed in between.
         log = _read_log(ws_path)
         by_v = {e["version"]: e for e in log}
-        refs = _ensure_main(ws_path, _read_refs(ws_path), log)
+        refs = _ensure_main(ws_path, _read_refs(ws_path))
         for r in (src, into):
             if r not in refs["branches"]:
                 raise ValueError(f"unknown branch {r!r}")
         src_v, into_v = refs["branches"][src], refs["branches"][into]
-        src_chain = _chain(by_v, src_v)
-        into_chain = _chain(by_v, into_v)
-        if src_v in into_chain:
+        base_v = _merge_base(by_v, src_v, into_v)
+        if base_v == src_v:
             return into_v  # up to date (includes equal heads)
-        if into_v in src_chain:
+        if base_v == into_v:
             # fast-forward: pointer advance, no new commit
             refs["branches"][into] = src_v
             _write_refs(ws_path, refs)
             return src_v
         # diverged: per-table content-aware union
-        src_set = set(src_chain)
-        base_v = next((v for v in into_chain if v in src_set), None)
         if base_v is None:
             raise ValueError(
                 f"branches {src!r} and {into!r} share no common ancestor"
@@ -666,8 +470,7 @@ def ws_merge_branch(
         names = {
             n
             for v in (src_v, into_v)
-            for c in [_chain(by_v, v)]
-            for x in c
+            for x in _ancestry(by_v, v)
             for n in by_v[x]["tables"]
         }
         tables: dict[str, dict] = {}
@@ -685,9 +488,7 @@ def ws_merge_branch(
             if t_set == b:
                 # Only src touched it: replay src wholesale — additions
                 # as a delta, a rewrite or creation as a restatement.
-                # Unambiguous because the target never moved the table
-                # (ADVICE r10: the old subset check wrongly flagged a
-                # one-sided rewrite as a conflict).
+                # Unambiguous because the target never moved the table.
                 extra = (
                     {}
                     if s_layout == "unknown"
@@ -723,9 +524,9 @@ def ws_merge_branch(
             )
             if adds:
                 tables[n] = {"adds": adds, **extra}
-        # Views three-way-merge by definition text (round 14): a view
-        # only one side changed replays that side; both-changed-
-        # differently is a conflict like a both-rewritten table.
+        # Views three-way-merge by definition text: a view only one side
+        # changed replays that side; both-changed-differently is a
+        # conflict like a both-rewritten table.
         base_views = _resolve_views(log, base_v)
         src_views = _resolve_views(log, src_v)
         into_views = _resolve_views(log, into_v)
@@ -747,21 +548,15 @@ def ws_merge_branch(
             )
         if not tables and not views:
             return into_v
-        head = log[-1]["version"]
-        version = head + 1
-        entry = {
-            "version": version,
-            "ts_ms": int(time.time() * 1000) if ts_ms is None else ts_ms,
-            "parent": into_v,
-            "merged_from": src_v,
-            "tables": tables,
-        }
-        if views:
-            entry["views"] = views
-        _append_entry(ws_path, entry)
-        refs["branches"][into] = version
-        _write_refs(ws_path, refs)
-        return version
+        return _ws_append_locked(
+            ws_path, log, into, ts_ms,
+            {
+                "parent": into_v,
+                "merged_from": src_v,
+                "tables": tables,
+                **({"views": views} if views else {}),
+            },
+        )
 
 
 def _resolve_any(ws_path: str, log: list[dict], ref) -> int:
@@ -778,11 +573,11 @@ def ws_diff(ws_path: str, from_ref, to_ref) -> dict[str, dict]:
     catalog-level answer the Nessie tree API's diff endpoint gives
     (blog-zero-cost-data-lakehouse.md:373-397) and the one-call answer
     'what changed between workspace v5 and v9, across ALL tables' that
-    the table-level m31 ``ref_diff`` could only give one table at a time
-    (VERDICT r10 ask #3). Accepts version ints or ref names on either
-    side. Returns ``{table: {"change": created|appended|rewritten|
-    removed, "added": [dirs], "removed": [dirs]}}`` for every table
-    whose file set differs; unchanged tables are omitted. Pure metadata:
+    the table-level m31 ``ref_diff`` could only give one table at a time.
+    Accepts version ints or ref names on either side. Returns
+    ``{table: {"change": created|appended|rewritten|removed, "added":
+    [dirs], "removed": [dirs]}}`` for every table whose file set
+    differs; unchanged tables are omitted. Pure metadata:
     two lineage resolutions per table, zero data bytes read — the
     returned directory lists are exactly what an incremental consumer
     scans, so the diff is also the PLAN of the minimal catch-up read."""
@@ -817,7 +612,7 @@ def ws_transplant(
 ) -> int:
     """Cherry-pick ONE workspace commit onto another branch — Nessie's
     catalog-level transplant (the table-level m32 lifted to multi-table
-    commits, VERDICT r10 ask #3): the commit's own per-table deltas are
+    commits): the commit's own per-table deltas are
     replayed against ``onto`` WITHOUT its siblings, atomically for every
     table it touched. Only well-defined deltas transplant: an append's
     delta is its ``adds``; a creation (``set`` where the commit's parent
@@ -829,7 +624,7 @@ def ws_transplant(
     with _log_lock(ws_path):
         log = _read_log(ws_path)
         by_v = {e["version"]: e for e in log}
-        refs = _ensure_main(ws_path, _read_refs(ws_path), log)
+        refs = _ensure_main(ws_path, _read_refs(ws_path))
         if onto not in refs["branches"]:
             raise ValueError(f"unknown branch {onto!r}")
         if src_version not in by_v:
@@ -884,21 +679,14 @@ def ws_transplant(
             tables[n] = delta
         if not tables:
             return onto_v
-        head = log[-1]["version"]
-        version = head + 1
-        _append_entry(
-            ws_path,
+        return _ws_append_locked(
+            ws_path, log, onto, ts_ms,
             {
-                "version": version,
-                "ts_ms": int(time.time() * 1000) if ts_ms is None else ts_ms,
                 "parent": onto_v,
                 "transplanted_from": src_version,
                 "tables": tables,
             },
         )
-        refs["branches"][onto] = version
-        _write_refs(ws_path, refs)
-        return version
 
 
 def ws_rollback(
@@ -921,7 +709,7 @@ def ws_rollback(
             raise ValueError(
                 f"version {version} not found (have {sorted(by_v)})"
             )
-        refs = _ensure_main(ws_path, _read_refs(ws_path), log)
+        refs = _ensure_main(ws_path, _read_refs(ws_path))
         if branch in refs["tags"]:
             raise ValueError(f"cannot roll back a tag {branch!r}")
         if branch not in refs["branches"]:
@@ -941,7 +729,7 @@ def ws_rollback(
             layout = _table_layout(by_v, version, n)
             if layout != "unknown":
                 tables[n]["partition_by"] = layout
-        # Views roll back too (round 14): the target's definitions
+        # Views roll back too: the target's definitions
         # restate, and views created after the target tombstone — the
         # same atomic-undo property as the table set.
         target_views = _resolve_views(log, version)
@@ -951,21 +739,28 @@ def ws_rollback(
         for n in _resolve_views(log, head_v):
             if n not in target_views:
                 views[n] = {"drop": True}
-        head = log[-1]["version"]
-        new_version = head + 1
-        entry = {
-            "version": new_version,
-            "ts_ms": int(time.time() * 1000) if ts_ms is None else ts_ms,
-            "parent": refs["branches"][branch],
-            "rolled_back_to": version,
-            "tables": tables,
-        }
-        if views:
-            entry["views"] = views
-        _append_entry(ws_path, entry)
-        refs["branches"][branch] = new_version
-        _write_refs(ws_path, refs)
-        return new_version
+        return _ws_append_locked(
+            ws_path, log, branch, ts_ms,
+            {
+                "parent": head_v,
+                "rolled_back_to": version,
+                "tables": tables,
+                **({"views": views} if views else {}),
+            },
+        )
+
+
+def _ws_dirs(log: list[dict], entries) -> list[str]:
+    """Every data directory ``entries`` resolve (every table the log
+    names, at each entry's version) — the workspace's dirs-of step for
+    the shared expiry and orphan cores."""
+    names = {n for e in log for n in e["tables"]}
+    return [
+        p
+        for e in entries
+        for n in names
+        for p in _resolve_table(log, n, e["version"]) or []
+    ]
 
 
 def ws_remove_orphans(
@@ -974,69 +769,25 @@ def ws_remove_orphans(
     """Workspace-level ``remove_orphan_files``: delete ``w{N}-*`` data
     directories NO commit entry's resolution references — the debris of
     CAS losers and died-mid-commit writers (ws_commit writes data
-    before the log swap, so a lost race leaves exactly this). Same
-    reconciliation as the table-level ``remove_orphan_dirs``:
-    referenced-set from the log (every table at every version),
-    candidate-set from a listing, difference removed; ``older_than_ms``
-    is the concurrent-writer safety window (directories at or after
-    the cutoff survive)."""
-    import re
-    import shutil
-
-    log = _read_log(ws_path)
-    referenced: set[str] = set()
-    names = {n for e in log for n in e["tables"]}
-    for e in log:
-        for n in names:
-            for p in _resolve_table(log, n, e["version"]) or []:
-                referenced.add(os.path.normpath(p))
-    removed: list[str] = []
-    pat = re.compile(r"^w\d+(-[0-9a-f]{8})?$")
-    for tdir in sorted(os.listdir(ws_path)):
-        full_t = os.path.join(ws_path, tdir)
-        if not os.path.isdir(full_t) or tdir.startswith("_"):
-            continue
-        for d in sorted(os.listdir(full_t)):
-            full = os.path.normpath(os.path.join(full_t, d))
-            if (
-                pat.match(d)
-                and os.path.isdir(full)
-                and full not in referenced
-                and (
-                    older_than_ms is None
-                    or os.path.getmtime(full) * 1000 < older_than_ms
-                )
-            ):
-                shutil.rmtree(full)
-                removed.append(full)
-    return removed
-
-
-def _ws_ref_protected(
-    ws_path: str, log: list[dict], heads_only: bool = False
-) -> set[int]:
-    """Every workspace version reachable from a ref (tag pins + branch
-    heads + full parent ancestry) — exempt from expiry, mirroring the
-    table-level `_ref_protected_versions` (VERDICT r9 ask #1 applied to
-    the workspace layer): a tagged cross-table state is addressable
-    until the tag is deleted."""
-    refs = _read_refs(ws_path)
-    heads = set(refs["branches"].values()) | set(refs["tags"].values())
-    if heads_only:
-        # Streaming retention mode (round 11): a linear main history is
-        # entirely reachable from its own head, so ancestry protection
-        # would make a one-commit-per-micro-batch workspace forever
-        # untruncatable; heads-only cuts to the ts window and keep_last
-        # while materialization keeps the boundary entries readable.
-        return heads
-    by_v = {e["version"]: e for e in log}
-    protected: set[int] = set()
-    for h in heads:
-        for v in _chain(by_v, h):
-            if v in protected:
-                break
-            protected.add(v)
-    return protected
+    before the log swap, so a lost race leaves exactly this). The
+    table-level ``remove_orphan_dirs`` reconcile step (``_remove_orphans``)
+    run one level down, over each table directory: referenced-set from
+    the log (every table at every version), candidate-set from a
+    listing, difference removed; ``older_than_ms`` is the
+    concurrent-writer safety window (directories at or after the cutoff
+    survive)."""
+    tables = [
+        os.path.join(ws_path, d)
+        for d in sorted(os.listdir(ws_path))
+        if not d.startswith("_") and os.path.isdir(os.path.join(ws_path, d))
+    ]
+    return _remove_orphans(
+        ws_path,
+        older_than_ms,
+        _ws_dirs,
+        tables,
+        re.compile(r"^w\d+(-[0-9a-f]{8})?$"),
+    )
 
 
 def ws_expire_versions(
@@ -1045,97 +796,44 @@ def ws_expire_versions(
 ) -> list[int]:
     """Expire workspace versions committed before ``older_than_ms``,
     always retaining the ``keep_last`` most recent AND every
-    ref-reachable version. Retained entries whose parent is expired are
-    MATERIALIZED: every table resolvable at that version is inlined as
-    a ``set`` (resolution computed on the full pre-prune log), so the
-    entry stays readable without its pruned ancestor. Data directories
-    referenced only by expired versions are deleted; directories any
-    retained version still resolves survive (append commits share files
-    across versions). Returns the expired version numbers."""
-    import shutil
+    ref-reachable version — a tagged cross-table state is addressable
+    until the tag is deleted (``truncate_history``: heads only, the
+    streaming retention mode of ``expire_snapshots_dirs``). Retained
+    entries whose parent is expired are MATERIALIZED: every table
+    resolvable at that version is inlined as a ``set`` (resolution
+    computed on the full pre-prune log), so the entry stays readable
+    without its pruned ancestor. Data directories referenced only by
+    expired versions are deleted; directories any retained version
+    still resolves survive (append commits share files across versions).
+    The protocol is the shared expiry core (``_expire``). Returns the
+    expired version numbers."""
 
-    with _log_lock(ws_path):
-        log = _read_log(ws_path)
-        if len(log) <= keep_last:
-            return []
-        protected = {e["version"] for e in log[-keep_last:]}
-        protected |= _ws_ref_protected(
-            ws_path, log, heads_only=truncate_history
-        )
-        expired = [
-            e
-            for e in log[:-keep_last]
-            if e["ts_ms"] < older_than_ms
-            and e["version"] not in protected
-        ]
-        if not expired:
-            return []
-        expired_vs = {e["version"] for e in expired}
-        names = {n for e in log for n in e["tables"]}
-        # built once: truncating retention can materialize SEVERAL
-        # boundary entries in one expiry, and this dict is O(log)
-        by_v_full = {x["version"]: x for x in log}
-        keep = []
-        for e in log:
-            if e["version"] in expired_vs:
-                continue
-            if e.get("parent") in expired_vs:
-                tables = {}
-                for n in names:
-                    paths = _resolve_table(log, n, e["version"])
-                    if paths is not None:
-                        tables[n] = {"set": paths}
-                        layout = _table_layout(by_v_full, e["version"], n)
-                        if layout != "unknown":
-                            tables[n]["partition_by"] = layout
-                e = {
-                    k: v
-                    for k, v in e.items()
-                    if k not in ("parent", "views")
-                }
-                e["tables"] = tables
-                # Views materialize the same way (round 14): the full
-                # resolved view map inlines so definitions from expired
-                # ancestors survive the chain cut.
-                vmap = _resolve_views(log, e["version"])
-                if vmap:
-                    e["views"] = {n: {"sql": s} for n, s in vmap.items()}
-                # Explicit end-of-chain: without it the implicit
-                # previous-version fallback walks a materialized entry's
-                # ancestry into a foreign lineage (ADVICE r10).
-                e["root"] = True
-            keep.append(e)
-        _touch_lock(ws_path)  # heartbeat before the long rewrite
-        _write_log(ws_path, keep)
-        # Drop indexed idempotency keys whose version was expired — the
-        # key's retry window has passed (table-level twin does the same).
-        refs = _read_refs(ws_path)
-        if refs.get("keys"):
-            kept_vs = {e["version"] for e in keep}
-            pruned = {
-                k: v for k, v in refs["keys"].items() if v in kept_vs
-            }
-            if len(pruned) != len(refs["keys"]):
-                refs["keys"] = pruned
-                _write_refs(ws_path, refs)
-    still = {
-        os.path.normpath(p)
-        for e in keep
-        for n in names
-        for p in (_resolve_table(keep, n, e["version"]) or [])
-    }
-    removed = []
-    for e in expired:
-        for n in names:
-            for p in _resolve_table(log, n, e["version"]) or []:
-                p = os.path.normpath(p)
-                if p not in still and p not in removed:
-                    shutil.rmtree(p, ignore_errors=True)
-                    removed.append(p)
-    return [e["version"] for e in expired]
+    def materialize(log, by_v, e):
+        tables = {}
+        for n in {n for x in log for n in x["tables"]}:
+            paths = _resolve_table(log, n, e["version"])
+            if paths is not None:
+                tables[n] = {"set": paths}
+                layout = _table_layout(by_v, e["version"], n)
+                if layout != "unknown":
+                    tables[n]["partition_by"] = layout
+        out = {k: v for k, v in e.items() if k not in ("parent", "views")}
+        out["tables"] = tables
+        # Views materialize the same way: the full resolved view map
+        # inlines so definitions from expired ancestors survive the
+        # chain cut.
+        vmap = _resolve_views(log, e["version"])
+        if vmap:
+            out["views"] = {n: {"sql": s} for n, s in vmap.items()}
+        return out
+
+    return _expire(
+        ws_path, older_than_ms, keep_last, truncate_history,
+        materialize, _ws_dirs,
+    )
 
 
-# --- rename + named views (round 14, VERDICT r13 'what's missing' #2) --------
+# --- rename + named views ---------------------------------------------------
 #
 # The reference's documented Nessie endpoint matrix
 # (blog-zero-cost-data-lakehouse.md:345-371) lists table RENAME and
@@ -1149,6 +847,33 @@ def ws_expire_versions(
 # tag sees the tables as that tag pinned them.
 
 
+def _ws_append_locked(
+    ws_path: str,
+    log: list[dict],
+    branch: str,
+    ts_ms: int | None,
+    fields: dict,
+) -> int:
+    """Append a metadata-only workspace commit ``{version, ts_ms,
+    **fields}`` moving ``branch`` from ``fields["parent"]`` (the pointer
+    the plan read), through the shared critical section
+    (``_commit_locked``). The caller holds the commit lock and planned
+    against ``log``: metadata-only plans are O(log walk), so holding the
+    lock is cheap and serializes them instead of needing the CAS retry
+    loop data commits use."""
+    head = log[-1]["version"]
+    entry = {
+        "version": head + 1,
+        "ts_ms": int(time.time() * 1000) if ts_ms is None else ts_ms,
+        **fields,
+    }
+    _commit_locked(
+        ws_path, entry, head, move_branch=branch,
+        expected_branch_v=fields["parent"],
+    )
+    return head + 1
+
+
 def _ws_meta_commit(
     ws_path: str,
     branch: str,
@@ -1157,37 +882,21 @@ def _ws_meta_commit(
 ) -> int:
     """Append a metadata-only workspace commit on ``branch``. ``plan(log,
     parent_v) -> (tables, views)`` builds the entry payload; it runs
-    INSIDE the commit lock (metadata-only plans are O(log walk), so
-    holding the lock is cheap and removes the CAS retry loop data
-    commits need)."""
+    INSIDE the commit lock."""
     with _log_lock(ws_path):
         log = _read_log(ws_path)
         if not log:
-            raise ValueError(f"no commits at {ws_path}")
-        head = log[-1]["version"]
-        refs = _read_refs(ws_path)
-        if branch in refs["tags"]:
-            raise ValueError(f"cannot commit to tag {branch!r}")
-        if branch == "main":
-            parent_v = refs["branches"].get("main", head)
-        elif branch in refs["branches"]:
-            parent_v = refs["branches"][branch]
-        else:
-            raise ValueError(f"unknown branch {branch!r}")
+            raise ValueError(f"no snapshots at {ws_path}")
+        _refs, parent_v = _branch_head(ws_path, branch)
         tables, views = plan(log, parent_v)
-        version = head + 1
-        entry = {
-            "version": version,
-            "ts_ms": int(time.time() * 1000) if ts_ms is None else ts_ms,
-            "tables": tables,
-            "parent": parent_v,
-        }
-        if views:
-            entry["views"] = views
-        _append_entry(ws_path, entry)
-        refs["branches"][branch] = version
-        _write_refs(ws_path, refs)
-        return version
+        return _ws_append_locked(
+            ws_path, log, branch, ts_ms,
+            {
+                "tables": tables,
+                "parent": parent_v,
+                **({"views": views} if views else {}),
+            },
+        )
 
 
 def ws_rename_table(
@@ -1208,7 +917,7 @@ def ws_rename_table(
     Raises if ``old`` is absent or ``new`` already exists at the branch
     head (Nessie's conflict rules).
 
-    Dependent views (ADVICE r14): a stored view whose SQL references
+    Dependent views: a stored view whose SQL references
     ``old`` would keep resolving at pre-rename refs but dangle at head
     (unresolved relation at execution time, far from the rename). The
     rename therefore RAISES, naming the dependent views, unless
@@ -1230,9 +939,7 @@ def ws_rename_table(
                 f"table {new!r} already exists at v{parent_v}"
             )
         if not force:
-            import re as _re
-
-            pat = _re.compile(rf"\b{_re.escape(old)}\b")
+            pat = re.compile(rf"\b{re.escape(old)}\b")
             dangling = sorted(
                 vn
                 for vn, sql in _resolve_views(log, parent_v).items()
@@ -1273,7 +980,7 @@ def _resolve_views(
         )
     out: dict[str, str] = {}
     seen: set[str] = set()
-    for v in _chain(by_v, version):
+    for v in _ancestry(by_v, version):
         for name, spec in by_v[v].get("views", {}).items():
             if name in seen:
                 continue
@@ -1371,17 +1078,16 @@ def ws_read_view(
             log[-1]["version"] if log else "?"
         )
         raise ValueError(f"view {name!r} does not exist at v{at}")
-    # Transient registrations (round 15): spark.sql resolves the view
-    # text against the temp views eagerly at analysis time, so they are
-    # dropped before returning — leaving them registered made a LATER
-    # read at a different version silently resolve a stale table
-    # snapshot instead of failing (e.g. a renamed-away table kept
-    # "existing" session-wide after any earlier view read). The
-    # analyzed plan is bound to the resolved file scans, so the
-    # returned frame survives the drops.
+    # Transient registrations: spark.sql resolves the view text against
+    # the temp views eagerly at analysis time, so they are dropped before
+    # returning — leaving them registered made a LATER read at a different
+    # version silently resolve a stale table snapshot instead of failing
+    # (e.g. a renamed-away table kept "existing" session-wide after any
+    # earlier view read). The analyzed plan is bound to the resolved file
+    # scans, so the returned frame survives the drops.
     # Pre-existing session temp views sharing a table's name are
-    # captured and RE-REGISTERED after the transient drop (ADVICE r15:
-    # the drop otherwise silently destroys caller session state; the
+    # captured and RE-REGISTERED after the transient drop (the
+    # drop otherwise silently destroys caller session state; the
     # captured frame's analyzed plan survives the round trip).
     created: list[str] = []
     saved: dict[str, DataFrame] = {}

@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import tempfile
 
 import pytest
@@ -554,11 +555,22 @@ def test_ws_commit_cas_conflict(spark):
 def test_ws_overwrite_and_missing_table(spark):
     from apache_iceberg_spark.catalog.workspace import (
         ws_commit,
+        ws_create_branch,
         ws_list_tables,
         ws_read,
+        ws_resolve_ref,
     )
 
     ws = tempfile.mkdtemp(prefix="r10_wsow_")
+    # An empty workspace gives one message on every path: the shared
+    # ref core's and the workspace's own.
+    for op in (
+        lambda: ws_read(spark, ws, "a"),
+        lambda: ws_resolve_ref(ws, "main"),
+        lambda: ws_create_branch(ws, "dev"),
+    ):
+        with pytest.raises(ValueError, match="no snapshots at " + re.escape(ws)):
+            op()
     ws_commit(ws, {"a": spark.range(5).select(F.col("id"))})
     ws_commit(
         ws, {"a": spark.range(100, 102).select(F.col("id"))},

@@ -557,18 +557,25 @@ def test_materialized_entry_does_not_phantom_resolve_foreign_lineage(spark):
 
 
 def test_table_level_root_terminates_ancestry():
-    from apache_iceberg_spark.catalog.snapshots import (
-        _ancestry,
-        _parent_of,
-    )
+    """The one lineage walk both layers share: a ``root`` entry ends the
+    chain even where the implicit previous-version rule would continue
+    into v1 — for table-shaped and workspace-shaped (``tables``) logs."""
+    from apache_iceberg_spark.catalog.snapshots import _ancestry
 
-    by_v = {
+    table_by_v = {
         1: {"version": 1, "path": "/p1"},
         3: {"version": 3, "paths": ["/p1", "/b"], "root": True},
         4: {"version": 4, "adds": ["/c"], "parent": 3},
     }
-    assert _parent_of(by_v, 3) is None
-    assert _ancestry(by_v, 4) == [4, 3]  # stops at the root, not v1
+    ws_by_v = {
+        1: {"version": 1, "tables": {"a": {"set": ["/a1"]}}},
+        3: {"version": 3, "tables": {"a": {"set": ["/a1", "/b"]}},
+            "root": True},
+        4: {"version": 4, "tables": {"a": {"adds": ["/c"]}}, "parent": 3},
+    }
+    for by_v in (table_by_v, ws_by_v):
+        assert list(_ancestry(by_v, 3)) == [3]  # root: no parent step
+        assert list(_ancestry(by_v, 4)) == [4, 3]  # stops at the root, not v1
 
 
 # ---------------------------------------------------------------------------
@@ -608,27 +615,23 @@ def test_idempotency_miss_is_o1_when_fully_indexed(spark):
     over a stream's lifetime (round 12 made the fully-indexed miss a
     pure refs-dict probe with zero log I/O)."""
     import apache_iceberg_spark.catalog.snapshots as S
-    import apache_iceberg_spark.catalog.workspace as W
 
     refs = {"branches": {"b": 500}, "tags": {}, "keys": {}, "keys_floor": 0}
 
     def boom(*a, **k):  # noqa: ANN002
         raise AssertionError("log-state access on a fully-indexed miss")
 
-    orig_state, orig_anc = S._refresh_state, S._state_ancestry
-    S._refresh_state, S._state_ancestry = boom, boom
+    orig_state, orig_anc = S._refresh_state, S._ancestry
+    S._refresh_state, S._ancestry = boom, boom
     try:
-        # nonexistent path: any state access would boom (or OSError)
-        assert (
-            S._find_idempotent("/nonexistent/t", refs, "b", 500, "nope")
-            is None
-        )
-        assert (
-            W._ws_find_idempotent("/nonexistent/ws", refs, "b", 500, "nope")
-            is None
-        )
+        # nonexistent paths: any state access would boom (or OSError);
+        # the one lookup serves table and workspace paths alike
+        for path in ("/nonexistent/t", "/nonexistent/ws"):
+            assert (
+                S._find_idempotent(path, refs, "b", 500, "nope") is None
+            )
     finally:
-        S._refresh_state, S._state_ancestry = orig_state, orig_anc
+        S._refresh_state, S._ancestry = orig_state, orig_anc
 
 
 def test_legacy_keyed_history_sets_floor_and_still_found(spark, ref_table):

@@ -84,6 +84,29 @@ def _old_update_delta(target, source, on, update_set, cond, insert):
     return delta
 
 
+def test_dir_group_key_corrupt_footer_is_ungrouped():
+    """A truncated parquet footer makes the grouping key ``None`` (the
+    dir keeps its own per-dir read) instead of raising ``ArrowInvalid``
+    out of every multi-dir read at plan time."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from apache_iceberg_spark.catalog.snapshots import _dir_group_key
+
+    base = tempfile.mkdtemp(prefix="r17gk_")
+    good, bad = os.path.join(base, "v1"), os.path.join(base, "v2")
+    for d in (good, bad):
+        os.makedirs(d)
+        pq.write_table(
+            pa.table({"k": list(range(100))}), os.path.join(d, "part-0.parquet")
+        )
+    f = os.path.join(bad, "part-0.parquet")
+    with open(f, "r+b") as fh:
+        fh.truncate(os.path.getsize(f) // 2)
+    assert _dir_group_key(good) is not None
+    assert _dir_group_key(bad) is None
+
+
 @pytest.mark.parametrize(
     "update_set,cond,insert",
     [
@@ -150,12 +173,12 @@ def test_bounded_state_refuses_concurrent_stream(spark):
         .start()
     )
     try:
+        before = spark.conf.get("spark.sql.shuffle.partitions")
         with pytest.raises(RuntimeError, match="refusing to narrow"):
             with _bounded_state(spark, 64):
                 pass
         # and the conf was left untouched by the refusal
-        before = spark.conf.get("spark.sql.shuffle.partitions")
-        assert before == spark.conf.get("spark.sql.shuffle.partitions")
+        assert spark.conf.get("spark.sql.shuffle.partitions") == before
     finally:
         q.stop()
     # with no active stream the scope narrows and restores
