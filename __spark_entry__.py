@@ -87,8 +87,14 @@ def _green_rounds() -> dict[str, int]:
 # those second-order consumers (m5/m47/m49/m5x, st7/st13/st19/st20/
 # st30/st37) and VERDICT r16 #10's st31-35/st38 are added explicitly.
 # The shared table/workspace version-log core adds its derived m*/st*
-# consumers (commit, ref, merge, expiry and orphan paths).
+# consumers (commit, ref, merge, expiry and orphan paths). The shared
+# operator kernels (Kendall pair counts, hourly spine, M4 fold, k-core
+# peel, approx-distinct check) and the two stream runners add theirs.
 RECHECK = frozenset({
+    "a11_approx_distinct",
+    "a17_approx_distinct",
+    "a41_kendall_tau_b",
+    "a53_kendall_tau",
     "ann11_trained_ivf",
     "ann16_residual_pq",
     "ann19_radius_search",
@@ -127,6 +133,7 @@ RECHECK = frozenset({
     "g16_weighted_pagerank",
     "g17_kcore",
     "g8_harmonic_centrality",
+    "j10_linear_interp_join",
     "m11_incremental_append_scan",
     "m12_schema_evolution_scan",
     "m13_merge_on_read_scan",
@@ -188,20 +195,52 @@ RECHECK = frozenset({
     "pp7_contamination_report",
     "pp8_corpus_shuffle",
     "pp9_multimodal_curation",
+    "st10_stream_time_weighted_avg",
+    "st11_stream_decontam_ingest",
     "st12_stream_incremental_dedup",
     "st13_stream_index_update",
+    "st14_stream_ewma",
+    "st15_stream_cusum",
+    "st16_stream_quality_gate",
+    "st17_stream_seasonal_scoring",
+    "st18_stream_m4_downsample",
     "st19_stream_branch_ingest",
+    "st1_stream_tumbling",
     "st20_stream_atomic_publish",
+    "st21_stream_seasonal_profile",
+    "st22_stream_changepoint",
+    "st23_stream_benford",
+    "st24_stream_rank_correlation",
+    "st25_stream_periodogram",
+    "st26_stream_bootstrap_ci",
+    "st27_stream_median_ci",
     "st28_stream_neardup_gate",
+    "st29_stream_page_hinkley",
+    "st2_stream_sliding",
     "st30_stream_cdc_upsert",
     "st31_stream_mutual_information",
     "st32_stream_jsd_drift",
     "st33_stream_countmin",
     "st34_stream_bloom_build",
     "st35_stream_hyperloglog",
+    "st36_stream_hash_sample",
     "st37_stream_guarded_cdc",
     "st38_stream_schema_evolution",
+    "st3_stream_dedup",
+    "st4_stream_static_join",
+    "st5_stream_stateful_sessions",
+    "st6_stream_session_window",
     "st7_stream_upsert",
+    "st8_stream_stream_join",
+    "st9_stream_ohlc",
+    "ts16_m4_downsample",
+    "ts20_cross_correlation",
+    "ts22_theil_sen_trend",
+    "ts24_stl_decompose",
+    "ts25_cusum_changepoint",
+    "ts27_forecast_backtest",
+    "ts32_mann_kendall",
+    "ts34_mann_kendall",
     "tx10_vocab_topk",
     "tx14_tfidf_keywords",
     "tx16_rarity_filter",

@@ -2884,21 +2884,26 @@ _A41_TAU = (
     doc="Kendall tau-b between line number and quantity — the ordinal-"
     "pair association test (a40's Spearman needs rank arithmetic; "
     "tau-b is the standard when both axes are small ordinal scales). "
-    "The O(n^2) pair space NEVER materializes: concordant pairs are "
-    "sum(n_xy * F(x-1, y-1)) over the joint contingency, where F is "
-    "the 2D dominance prefix computed as two chained 1D window cumsums "
-    "on the DENSE |X|x|Y| grid (cross join of the axis supports, "
-    "zero-filled) plus two LAGs for the strict corner; discordant "
-    "pairs reuse the same frame via lx - F(x-1, y). 100 TB shape: ONE "
-    "fact shuffle into cells, everything after is grid-sized — "
+    "The O(n^2) pair space NEVER materializes. The oracle counts "
+    "concordant pairs as sum(n_xy * F(x-1, y-1)) over the joint "
+    "contingency, F the 2D dominance prefix (two chained window "
+    "cumsums plus two LAGs on the dense |X|x|Y| grid); Spark runs "
+    "a53's `_kendall_pair_counts` kernel on the same cells — two "
+    "window suffix-sums over the dense grid (axis supports cross "
+    "joined, zero-filled) count pairs increasing in both axes "
+    "(concordant) or opposed (discordant), ties from the marginals; "
+    "the counts are identical integers. 100 TB shape: ONE fact "
+    "shuffle into cells, everything after is grid-sized — "
     "_snap_cell_axis caps each axis at 256 grid cells above 1,024 "
-    "distinct (dense grid <= 65,536 rows gated, <= 1M ungated); the "
-    "window partitions are one grid line each, and the single global "
-    "window (the x-marginal cumsum) is axis-sized. Digit budget: "
-    "prefix sums and pair products run in DECIMAL(38,0)/HUGEINT — "
-    "n0 = n(n-1)/2 alone passes int64 at n ~ 4.3e9 rows; the pair "
-    "counts project as one correctly-rounded DOUBLE cast and tau_b "
-    "computes FROM the exact decimals in the shared float formula.",
+    "distinct (dense grid <= 65,536 rows gated, <= 1M ungated), the "
+    "cell frame broadcasts into the densify join, and every window "
+    "partition is one grid line. Digit budget: pair products and the "
+    "concordant/discordant sums run in DECIMAL(38,0)/HUGEINT; n0 = "
+    "n(n-1)/2 and the tie counts are integral DIVs (BIGINT on the Spark "
+    "side, which ANSI mode makes raise rather than wrap past n ~ 4.3e9 "
+    "rows); the pair counts project as one correctly-rounded DOUBLE "
+    "cast and tau_b computes FROM the exact counts in the shared float "
+    "formula.",
     tags=("aggregate", "statistics"),
 )
 def a41_kendall_tau_b(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2907,70 +2912,20 @@ def a41_kendall_tau_b(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(F.col("l_quantity")).cast("long").alias("xv"),
         F.col("l_linenumber").cast("long").alias("yv"),
     )
-    cells = rows.groupBy("xv", "yv").agg(F.count(F.lit(1)).alias("cnt"))
-    cells, _sx = _snap_cell_axis(
-        cells, "xv", max_support=A41_MAX_AXIS, grid=A41_AXIS_GRID
-    )
-    cells, _sy = _snap_cell_axis(
-        cells, "yv", max_support=A41_MAX_AXIS, grid=A41_AXIS_GRID
-    )
+    cells = rows.groupBy("xv", "yv").agg(F.count(F.lit(1)).alias("c"))
+    for axis in ("xv", "yv"):
+        cells, _step = _snap_cell_axis(
+            cells, axis, "c", max_support=A41_MAX_AXIS, grid=A41_AXIS_GRID
+        )
     # plan-cache: cells feeds the dense grid, both axis supports, and
     # both tie marginals (released via session.release_plan_caches)
-    cells = cells.persist()
-    xs = cells.select("xv").distinct()
-    ys = cells.select("yv").distinct()
-    dense = (
-        xs.crossJoin(ys)
-        # broadcast: cells are grid-bounded after the axis gates
-        # (<= 1,024^2 ungated, <= 256^2 gated) — never fact-sized
-        .join(F.broadcast(cells), ["xv", "yv"], "left")
-        .select("xv", "yv", F.coalesce("cnt", F.lit(0)).alias("nf"))
-        # plan-cache: dense feeds the prefix chain and both marginals
-        .persist()
-    )
-    dec = "decimal(38,0)"
-    cum = lambda w: w.rowsBetween(Window.unboundedPreceding, Window.currentRow)  # noqa: E731
-    w_y_in_x = Window.partitionBy("xv").orderBy("yv")
-    w_x_in_y = Window.partitionBy("yv").orderBy("xv")
-    pref = (
-        dense.withColumn(
-            "rowcum", F.sum(F.col("nf").cast(dec)).over(cum(w_y_in_x))
-        )
-        .withColumn("fcum", F.sum("rowcum").over(cum(w_x_in_y)))
-        .withColumn("gleft", F.lag("fcum", 1, 0).over(w_x_in_y))
-        .withColumn("p", F.lag("gleft", 1, 0).over(w_y_in_x))
-    )
-    colm = dense.groupBy("xv").agg(F.sum(F.col("nf").cast(dec)).alias("cx"))
-    colc = colm.select(
-        "xv",
-        "cx",
-        (F.sum("cx").over(cum(Window.orderBy("xv"))) - F.col("cx")).alias(
-            "lx"
-        ),
-    )
-    rowm = dense.groupBy("yv").agg(F.sum(F.col("nf").cast(dec)).alias("cy"))
-    cd = (
-        pref.join(F.broadcast(colc.select("xv", "lx")), "xv")
-        .agg(
-            F.sum(F.col("nf").cast(dec)).alias("n"),
-            F.sum(F.expr("CAST(nf AS DECIMAL(38,0)) * p")).alias("c"),
-            F.sum(F.expr("CAST(nf AS DECIMAL(38,0)) * (lx - gleft)")).alias(
-                "d"
-            ),
-        )
-    )
-    tx = colm.agg(F.sum(F.expr("(cx * (cx - 1)) DIV 2")).alias("tx"))
-    ty = rowm.agg(F.sum(F.expr("(cy * (cy - 1)) DIV 2")).alias("ty"))
-    f = (
-        cd.crossJoin(F.broadcast(tx))
-        .crossJoin(F.broadcast(ty))
-        .withColumn("n0", F.expr("(n * (n - 1)) DIV 2"))
-    )
-    return f.select(
-        F.col("n").cast("long").alias("n_rows"),
-        F.col("c").cast("double").alias("concordant"),
-        F.col("d").cast("double").alias("discordant"),
-        F.expr(_A41_TAU).alias("tau_b"),
+    k = _kendall_pair_counts(cells.persist())
+    return k.select(
+        F.col("n").alias("n_rows"),
+        F.col("conc").cast("double").alias("concordant"),
+        F.col("disc").cast("double").alias("discordant"),
+        # _A41_TAU's IEEE tree over the kernel's column names
+        F.expr(_A53_TAU).alias("tau_b"),
     )
 
 
@@ -4492,18 +4447,25 @@ def _kendall_pair_counts(cells: DataFrame) -> DataFrame:
     ``g(x,y) = Σ_{x'>x} s_hi(x',y)`` per y-partition — so
     ``conc = Σ c·g`` counts pairs strictly increasing in BOTH axes;
     ``h`` mirrors with y'<y for discordant. Tie pair counts come from
-    the marginals. Everything is exact integers (DECIMAL(38,0)
-    products); returns one row
-    ``(n, n2, conc, disc, tx_pairs, ty_pairs)``.
+    the marginals. Everything is exact integers; returns one row
+    ``(n, n2, conc, disc, tx_pairs, ty_pairs)``: conc and disc are
+    DECIMAL(38,0) sums of DECIMAL products (a41's digit budget); n2 and
+    the tie-pair counts come out of an integral DIV, which Spark types
+    BIGINT (ANSI mode raises rather than wraps past int64, i.e. n ~
+    4.3e9 rows). Callers whose oracle narrows the counts to BIGINT cast
+    before their float formula. The one Kendall kernel: a41, a53, and
+    ts32/ts34 (through the Mann-Kendall finish) all call it.
 
     Scale: ONE shuffle builds the cells from the fact table (the
-    caller's groupBy); everything here is support-sized — windows and
-    broadcasts over ≤ a few thousand rows regardless of fact rows."""
+    caller's groupBy); everything here is cell-sized — windows and
+    broadcasts over the support grid regardless of fact rows (the
+    cells broadcast into the densify join: every caller's cell frame
+    is grid-bounded)."""
     xs = cells.select("xv").distinct()
     ys = cells.select("yv").distinct()
     dense = (
         xs.crossJoin(F.broadcast(ys))
-        .join(cells, ["xv", "yv"], "left")
+        .join(F.broadcast(cells), ["xv", "yv"], "left")
         .select("xv", "yv", F.coalesce(F.col("c"), F.lit(0)).alias("c"))
     )
     w_hi = Window.partitionBy("xv").orderBy("yv").rowsBetween(
@@ -4529,12 +4491,8 @@ def _kendall_pair_counts(cells: DataFrame) -> DataFrame:
     )
     pair = d2.agg(
         F.sum("c").cast("long").alias("n"),
-        F.sum(F.expr("CAST(c AS DECIMAL(38,0)) * g"))
-        .cast("long")
-        .alias("conc"),
-        F.sum(F.expr("CAST(c AS DECIMAL(38,0)) * h"))
-        .cast("long")
-        .alias("disc"),
+        F.sum(F.expr("CAST(c AS DECIMAL(38,0)) * g")).alias("conc"),
+        F.sum(F.expr("CAST(c AS DECIMAL(38,0)) * h")).alias("disc"),
     )
     tx = (
         cells.groupBy("xv")
@@ -4542,7 +4500,7 @@ def _kendall_pair_counts(cells: DataFrame) -> DataFrame:
         .agg(
             F.sum(
                 F.expr("CAST(cx AS DECIMAL(38,0)) * (cx - 1) DIV 2")
-            ).cast("long").alias("tx_pairs")
+            ).alias("tx_pairs")
         )
     )
     ty = (
@@ -4551,7 +4509,7 @@ def _kendall_pair_counts(cells: DataFrame) -> DataFrame:
         .agg(
             F.sum(
                 F.expr("CAST(cy AS DECIMAL(38,0)) * (cy - 1) DIV 2")
-            ).cast("long").alias("ty_pairs")
+            ).alias("ty_pairs")
         )
     )
     return (
@@ -4559,9 +4517,7 @@ def _kendall_pair_counts(cells: DataFrame) -> DataFrame:
         .crossJoin(F.broadcast(ty))
         .select(
             "n",
-            F.expr(
-                "CAST(CAST(n AS DECIMAL(38,0)) * (n - 1) DIV 2 AS BIGINT)"
-            ).alias("n2"),
+            F.expr("CAST(n AS DECIMAL(38,0)) * (n - 1) DIV 2").alias("n2"),
             "conc",
             "disc",
             "tx_pairs",
@@ -4680,7 +4636,14 @@ def a53_kendall_tau(spark: SparkSession, sf_dir: str) -> DataFrame:
         # marginals) — without it each re-derivation rescans the fact
         # table (released by the caller via release_plan_caches)
     )
-    k = _kendall_pair_counts(cells)
+    # the oracle narrows every pair count to BIGINT before tau
+    k = _kendall_pair_counts(cells).select(
+        "n",
+        *[
+            F.col(c).cast("long").alias(c)
+            for c in ("n2", "conc", "disc", "tx_pairs", "ty_pairs")
+        ],
+    )
     return k.select(
         F.col("n").alias("n_rows"),
         "conc",

@@ -418,11 +418,14 @@ def a11_approx_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return agg.select(
         "exact_custmonths",
-        (
-            F.abs(F.col("approx") - F.col("exact_custmonths"))
-            <= 0.05 * F.col("exact_custmonths")
-        ).alias("approx_within_5pct"),
+        within_5pct("approx", "exact_custmonths").alias("approx_within_5pct"),
     )
+
+
+def within_5pct(approx: str, exact: str) -> F.Column:
+    """The bounds-oracle check of the approx-distinct operators (a11,
+    a17): the sketch estimate lands within 5% of the exact count."""
+    return F.abs(F.col(approx) - F.col(exact)) <= 0.05 * F.col(exact)
 
 
 @register(
@@ -2108,16 +2111,10 @@ def j10_linear_interp_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             - F.unix_timestamp(F.date_trunc("hour", F.col("ts")))
         ).cast("long").alias("off_s"),
     ).persist()  # plan-cache: probe side + anchor series
-    hourly = ev.groupBy("h").agg(F.count(F.lit(1)).alias("x"))
-    b = hourly.agg(F.min("h").alias("h0"), F.max("h").alias("h1"))
-    anchors = (
-        b.select(
-            F.explode(
-                F.sequence("h0", "h1", F.expr("INTERVAL 1 HOUR"))
-            ).alias("h")
-        )
-        .join(hourly, "h", "left")
-        .select("h", F.coalesce(F.col("x"), F.lit(0).cast("long")).alias("x"))
+    from apache_iceberg_spark.operators.timeseries import _spine_from_hourly
+
+    anchors = _spine_from_hourly(
+        ev.groupBy("h").agg(F.count(F.lit(1)).alias("x"))
     )
     a0 = anchors.select(F.col("h").alias("h0_"), F.col("x").alias("x0"))
     a1 = anchors.select(

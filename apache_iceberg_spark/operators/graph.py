@@ -1798,17 +1798,7 @@ def _g14_oracle() -> str:
     tags=("graph", "community"),
 )
 def g14_kcore_peeling(spark: SparkSession, sf_dir: str) -> DataFrame:
-    l = load_table_parallel(spark, sf_dir, "lineitem")
-    o = load_table(spark, sf_dir, "orders")
-    edges = (
-        l.join(o, l["l_orderkey"] == o["o_orderkey"])
-        .select(F.col("o_custkey").alias("c"), F.col("l_suppkey").alias("s"))
-        .distinct()
-        # plan-cache: each round's edge frame feeds BOTH degree aggs,
-        # both semi-join filters, and the stats row of the RETURNED lazy
-        # union (released by the caller via release_plan_caches)
-        .persist()
-    )
+    edges = _trade_edges(spark, sf_dir)
 
     def stats(e: DataFrame, rnd: int) -> DataFrame:
         return e.agg(
@@ -1819,19 +1809,53 @@ def g14_kcore_peeling(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     out = stats(edges, 0)
-    cur = edges
     for i in range(1, G14_ROUNDS + 1):
-        cdeg = cur.groupBy("c").agg(F.count(F.lit(1)).alias("dc")).filter(
-            F.col("dc") >= G14_K
-        ).select("c")
-        sdeg = cur.groupBy("s").agg(F.count(F.lit(1)).alias("ds")).filter(
-            F.col("ds") >= G14_K
-        ).select("s")
-        cur = cur.join(cdeg, "c", "left_semi").join(
-            sdeg, "s", "left_semi"
-        ).persist()
-        out = out.unionByName(stats(cur, i))
+        edges = _kcore_peel(edges, G14_K)
+        out = out.unionByName(stats(edges, i))
     return out.orderBy("round")
+
+
+def _trade_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The distinct customer<->supplier trade edges (c, s) that both
+    k-core operators (g14, g17) peel, persisted."""
+    l = load_table_parallel(spark, sf_dir, "lineitem")
+    o = load_table(spark, sf_dir, "orders")
+    return (
+        l.join(o, l["l_orderkey"] == o["o_orderkey"])
+        .select(F.col("o_custkey").alias("c"), F.col("l_suppkey").alias("s"))
+        .distinct()
+        # plan-cache: the edge frame feeds BOTH degree aggs and both
+        # semi-join filters of the first peel round, plus g14's stats
+        # row of the RETURNED lazy union (g14 leaves it to
+        # release_plan_caches; g17 unpersists it after round one)
+        .persist()
+    )
+
+
+def _kcore_peel(edges: DataFrame, k: int) -> DataFrame:
+    """One synchronous k-core peel round over (c, s) edges: recompute
+    both sides' degrees on the surviving subgraph and keep the edges
+    whose endpoints both have degree >= k (two degree aggs + two
+    semi-joins — no cartesian, no nested loop). Persisted."""
+    keep_c = (
+        edges.groupBy("c")
+        .agg(F.count(F.lit(1)).alias("d"))
+        .filter(F.col("d") >= k)
+        .select("c")
+    )
+    keep_s = (
+        edges.groupBy("s")
+        .agg(F.count(F.lit(1)).alias("d"))
+        .filter(F.col("d") >= k)
+        .select("s")
+    )
+    return (
+        edges.join(keep_c, "c", "left_semi")
+        .join(keep_s, "s", "left_semi")
+        # plan-cache: the next round's degree aggs and semi-joins read
+        # it, and g14's stats row of the RETURNED lazy union
+        .persist()
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -2189,16 +2213,7 @@ G17_ROUNDS = 4
     tags=("graph",),
 )
 def g17_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
-    l = load_table_parallel(spark, sf_dir, "lineitem")
-    o = load_table(spark, sf_dir, "orders")
-    edges = (
-        l.join(o, l["l_orderkey"] == o["o_orderkey"])
-        .select(
-            F.col("o_custkey").alias("c"), F.col("l_suppkey").alias("s")
-        )
-        .distinct()
-        .persist()
-    )
+    edges = _trade_edges(spark, sf_dir)
     counts: list[int] = [edges.count()]
     for _r in range(G17_ROUNDS):
         if len(counts) >= 2 and counts[-1] == counts[-2]:
@@ -2209,23 +2224,7 @@ def g17_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
             # the common fast-converging case from O(R) to O(actual)
             # shuffles.
             break
-        keep_c = (
-            edges.groupBy("c")
-            .agg(F.count(F.lit(1)).alias("d"))
-            .filter(F.col("d") >= G17_K)
-            .select("c")
-        )
-        keep_s = (
-            edges.groupBy("s")
-            .agg(F.count(F.lit(1)).alias("d"))
-            .filter(F.col("d") >= G17_K)
-            .select("s")
-        )
-        new_edges = (
-            edges.join(keep_c, "c", "left_semi")
-            .join(keep_s, "s", "left_semi")
-            .persist()
-        )
+        new_edges = _kcore_peel(edges, G17_K)
         counts.append(new_edges.count())
         # the new round is materialized; its parent cache is dead weight
         edges.unpersist()

@@ -28,6 +28,7 @@ import tempfile
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
+from apache_iceberg_spark.operators.functions_ext import within_5pct
 from apache_iceberg_spark.operators.text import (
     _TOKEN_SPLIT,
     DUCK_HEX2INT,
@@ -736,15 +737,11 @@ def a17_approx_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.approx_count_distinct("o_custkey", 0.01).alias("ac"),
         F.approx_count_distinct("o_orderkey", 0.01).alias("ao"),
     )
-    within = lambda approx, exact: (
-        F.abs(F.col(approx) - F.col(exact))
-        <= 0.05 * F.col(exact)
-    )
     return agg.select(
         "exact_custkeys",
         "exact_orderkeys",
-        within("ac", "exact_custkeys").alias("custkeys_within_5pct"),
-        within("ao", "exact_orderkeys").alias("orderkeys_within_5pct"),
+        within_5pct("ac", "exact_custkeys").alias("custkeys_within_5pct"),
+        within_5pct("ao", "exact_orderkeys").alias("orderkeys_within_5pct"),
     )
 
 

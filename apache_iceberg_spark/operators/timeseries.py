@@ -15,8 +15,12 @@ be bucketed on user_id so the join is co-located.
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, GroupedData, SparkSession, Window
 
+from apache_iceberg_spark.operators.analytics import (
+    _A53_ORACLE_CORE,
+    _kendall_pair_counts,
+)
 from apache_iceberg_spark.registry import register
 from apache_iceberg_spark.tables import load_table
 
@@ -1317,28 +1321,32 @@ def ts16_m4_downsample(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id",
         F.round(F.col("value") * 100).cast("long").alias("v_c"),
     )
-    first = F.min(F.struct("tus", "event_id", "v_c")).alias("f")
-    last = F.max(F.struct("tus", "event_id", "v_c")).alias("l")
-    return (
-        pts.groupBy("event_type", "bucket")
-        .agg(
-            F.count("*").alias("n_points"),
-            F.min("v_c").alias("v_min_c"),
-            F.max("v_c").alias("v_max_c"),
-            first,
-            last,
-        )
-        .select(
-            "event_type",
-            "bucket",
-            "n_points",
-            "v_min_c",
-            "v_max_c",
-            F.col("f.tus").alias("first_tus"),
-            F.col("f.v_c").alias("first_v_c"),
-            F.col("l.tus").alias("last_tus"),
-            F.col("l.v_c").alias("last_v_c"),
-        )
+    return ts16_m4_fold(pts.groupBy("event_type", "bucket"), "bucket")
+
+
+def ts16_m4_fold(grouped: GroupedData, bucket: str | F.Column) -> DataFrame:
+    """M4's aggregate and output projection over (event_type, tus,
+    event_id, v_c) points grouped per series and bucket — shared by
+    batch ts16 (grouped on the bucket column) and streaming st18
+    (grouped on a tumbling window; ``bucket`` derives the id from it).
+    first/last are lexicographic MIN/MAX of a (tus, event_id, v_c)
+    struct, deterministic because event_id is unique."""
+    return grouped.agg(
+        F.count("*").alias("n_points"),
+        F.min("v_c").alias("v_min_c"),
+        F.max("v_c").alias("v_max_c"),
+        F.min(F.struct("tus", "event_id", "v_c")).alias("f"),
+        F.max(F.struct("tus", "event_id", "v_c")).alias("l"),
+    ).select(
+        "event_type",
+        bucket,
+        "n_points",
+        "v_min_c",
+        "v_max_c",
+        F.col("f.tus").alias("first_tus"),
+        F.col("f.v_c").alias("first_v_c"),
+        F.col("l.tus").alias("last_tus"),
+        F.col("l.v_c").alias("last_v_c"),
     )
 
 
@@ -1806,34 +1814,47 @@ def _hourly_spine(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _spine_from_hourly(hourly)
 
 
-def _spine_from_hourly(hourly: DataFrame) -> DataFrame:
-    """Zero-fill an (h, x) hourly-count frame onto its own calendar
-    span and index it as (t, x). Split out of _hourly_spine so st25 can
-    feed the STREAM's per-hour count state (the same mergeable partial)
-    through the identical spine construction."""
-    b = hourly.agg(
-        F.min("h").alias("h0"),
-        F.max("h").alias("h1"),
-    )
+def _spine_from_hourly(
+    hourly: DataFrame, keys: tuple[str, ...] = ()
+) -> DataFrame:
+    """Zero-fill an (h, [keys...], counts...) hourly frame onto its own
+    calendar span [min(h), max(h)] — per distinct key tuple when
+    ``keys`` name series columns — and index it as (keys..., t, h,
+    counts...): every other column is a count and missing hours count
+    0. The one spine build of the hourly family — batch operators (via
+    _hourly_spine, ts20, ts22, ts24, ts25, ts27, j10) and the streams
+    that feed their per-hour count state through it (st22, st25). The
+    span is the hourly frame's own; where an oracle takes it from the
+    raw events' min/max ts, the two agree because the hourly frame
+    groups every event."""
+    b = hourly.agg(F.min("h").alias("h0"), F.max("h").alias("h1"))
     spine = b.select(
         F.col("h0"),
         F.explode(
             F.sequence("h0", "h1", F.expr("INTERVAL 1 HOUR"))
         ).alias("h"),
     )
+    if keys:  # hours x series: spine-sized
+        spine = spine.crossJoin(F.broadcast(hourly.select(*keys).distinct()))
+    counts = [c for c in hourly.columns if c != "h" and c not in keys]
     return (
-        spine.join(hourly, "h", "left")
+        spine.join(hourly, ["h", *keys], "left")
         .select(
+            *keys,
             (
                 (
                     F.unix_timestamp("h") - F.unix_timestamp("h0")
                 ) / 3600
             ).cast("long").alias("t"),
-            F.coalesce(F.col("x"), F.lit(0).cast("long")).alias("x"),
+            "h",
+            *[
+                F.coalesce(F.col(c), F.lit(0).cast("long")).alias(c)
+                for c in counts
+            ],
         )
-    ).persist()  # plan-cache: multiple consumers (the global-moment agg
-    # and BOTH sides of the shifted-index lag join) — unpersisted,
-    # execution re-runs the events scan + hourly aggregation per consumer
+    ).persist()  # plan-cache: every caller reads the spine more than
+    # once (moment aggs, both sides of its self-joins, window finishes)
+    # — unpersisted, execution re-runs the scan + hourly agg per consumer
 
 
 def _ts19_acf_frame(
@@ -1964,23 +1985,8 @@ def ts20_cross_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.when(F.col("event_type") == TS20_Y, 1).otherwise(0)
         ).alias("y"),
     )
-    b = e.agg(
-        F.date_trunc("hour", F.min("ts")).alias("h0"),
-        F.date_trunc("hour", F.max("ts")).alias("h1"),
-    )
-    spine = b.select(
-        F.col("h0"),
-        F.explode(
-            F.sequence("h0", "h1", F.expr("INTERVAL 1 HOUR"))
-        ).alias("h"),
-    )
-    sp = spine.join(hourly, "h", "left").select(
-        (
-            (F.unix_timestamp("h") - F.unix_timestamp("h0")) / 3600
-        ).cast("long").alias("t"),
-        F.coalesce(F.col("x"), F.lit(0).cast("long")).alias("x"),
-        F.coalesce(F.col("y"), F.lit(0).cast("long")).alias("y"),
-    ).persist()  # plan-cache: three consumers (see _ts19_acf_frame)
+    # hourly groups every event, so its span is the oracle's raw-ts span
+    sp = _spine_from_hourly(hourly)
     g = sp.agg(
         F.sum("x").alias("s1x"),
         F.sum(F.col("x") * F.col("x")).alias("s2x"),
@@ -2217,7 +2223,7 @@ TS22_MICRO = 1_000_000
     "bounded (720 points -> 259k pairs here; ~9k points/year), never "
     "in the row count — an unbounded-span deployment coarsens the "
     "bucket first (a27's guard argument), the standard practice for "
-    "Theil-Sen at scale. Overflow bound (VERDICT r11 ask #7 audit): "
+    "Theil-Sen at scale. Overflow bound: "
     "the slope numerator dx * 1e6 is the widest integer — BIGINT-safe "
     "while any single hourly bucket holds < 9.2e12 events (2^63/1e6); "
     "a deployment past ~9 trillion events/hour has coarsened the "
@@ -2230,22 +2236,8 @@ def ts22_theil_sen_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     hourly = e.groupBy(F.date_trunc("hour", F.col("ts")).alias("h")).agg(
         F.count(F.lit(1)).alias("x")
     )
-    b = e.agg(
-        F.date_trunc("hour", F.min("ts")).alias("h0"),
-        F.date_trunc("hour", F.max("ts")).alias("h1"),
-    )
-    spine = b.select(
-        F.col("h0"),
-        F.explode(
-            F.sequence("h0", "h1", F.expr("INTERVAL 1 HOUR"))
-        ).alias("h"),
-    )
-    sp = spine.join(hourly, "h", "left").select(
-        (
-            (F.unix_timestamp("h") - F.unix_timestamp("h0")) / 3600
-        ).cast("long").alias("t"),
-        F.coalesce(F.col("x"), F.lit(0).cast("long")).alias("x"),
-    ).persist()  # plan-cache: both pair-join sides + the n_points agg
+    # hourly groups every event, so its span is the oracle's raw-ts span
+    sp = _spine_from_hourly(hourly)
     a, c = sp.alias("a"), sp.alias("c")
     slopes = a.join(c, F.col("c.t") > F.col("a.t")).select(
         F.expr(
@@ -2253,7 +2245,7 @@ def ts22_theil_sen_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("v")
     )
     per_v = slopes.groupBy("v").agg(F.count(F.lit(1)).alias("cnt"))
-    # Distinct-slope support gate (VERDICT r10 ask #5): the cumsum
+    # Distinct-slope support gate: the cumsum
     # window below is a deliberate SinglePartition over distinct slope
     # values; >2M distinct snaps to the A25_GRID grid before it (the
     # calendar-bounded hourly spine keeps this fixture exact).
@@ -2528,27 +2520,10 @@ def ts24_stl_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
     hourly = e.groupBy(
         "event_type", F.date_trunc("hour", F.col("ts")).alias("h")
     ).agg(F.count(F.lit(1)).alias("x"))
-    b = e.agg(
-        F.date_trunc("hour", F.min("ts")).alias("h0"),
-        F.date_trunc("hour", F.max("ts")).alias("h1"),
-    )
-    types = e.select("event_type").distinct()
-    spine = (
-        b.select(
-            "h0",
-            F.explode(
-                F.sequence("h0", "h1", F.expr("INTERVAL 1 HOUR"))
-            ).alias("h"),
-        )
-        .crossJoin(F.broadcast(types))  # hours x |types|: spine-sized
-    )
-    sp = spine.join(hourly, ["event_type", "h"], "left").select(
-        "event_type",
-        (
-            (F.unix_timestamp("h") - F.unix_timestamp("h0")) / 3600
-        ).cast("long").alias("t"),
-        F.hour("h").cast("long").alias("hod"),
-        F.coalesce(F.col("x"), F.lit(0).cast("long")).alias("x"),
+    # hourly groups every event, so its span and type set are the
+    # oracle's raw-events ones
+    sp = _spine_from_hourly(hourly, ("event_type",)).select(
+        "event_type", "t", F.hour("h").cast("long").alias("hod"), "x"
     )
     w = (
         Window.partitionBy("event_type")
@@ -2608,22 +2583,7 @@ def _ts25_finish(spark: SparkSession, per_hour: DataFrame) -> DataFrame:
     bound is the OUTPUT's, not the arithmetic's."""
     # plan-cache the spine-sized per-hour table: it feeds the bounds agg
     # AND the spine join — unpersisted, each branch re-scans the facts
-    per_hour = per_hour.persist()
-    b = per_hour.agg(
-        F.min("h").alias("h0"), F.max("h").alias("h1")
-    )
-    spine = b.select(
-        F.col("h0"),
-        F.explode(
-            F.sequence("h0", "h1", F.expr("INTERVAL 1 HOUR"))
-        ).alias("h"),
-    )
-    sp = spine.join(per_hour, "h", "left").select(
-        (
-            (F.unix_timestamp("h") - F.unix_timestamp("h0")) / 3600
-        ).cast("long").alias("t"),
-        F.coalesce(F.col("x"), F.lit(0).cast("long")).alias("x"),
-    )
+    sp = _spine_from_hourly(per_hour.persist())
     tot = sp.agg(
         F.count(F.lit(1)).alias("m"), F.sum("x").alias("tt")
     )
@@ -2796,20 +2756,10 @@ def ts27_forecast_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "events")
     hourly = e.groupBy(F.date_trunc("hour", F.col("ts")).alias("h")).agg(
         F.count(F.lit(1)).alias("x")
-    ).persist()  # plan-cache: spine-sized; bounds agg + spine join
-    b = hourly.agg(F.min("h").alias("h0"), F.max("h").alias("h1"))
-    spine = b.select(
-        F.col("h0"),
-        F.explode(
-            F.sequence("h0", "h1", F.expr("INTERVAL 1 HOUR"))
-        ).alias("h"),
     )
-    sp = spine.join(hourly, "h", "left").select(
-        (
-            (F.unix_timestamp("h") - F.unix_timestamp("h0")) / 3600
-        ).cast("long").alias("t"),
-        F.coalesce(F.col("x"), F.lit(0).cast("long")).alias("x"),
-    ).persist()  # plan-cache: three self-join slots ride this frame
+    # plan-cache: hourly feeds the bounds agg + spine join; the spine
+    # feeds the three self-join slots
+    sp = _spine_from_hourly(hourly.persist())
     c, n1, s24 = sp.alias("c"), sp.alias("n1"), sp.alias("s24")
     errs = (
         c.join(n1, F.col("n1.t") == F.col("c.t") - 1)
@@ -3720,50 +3670,23 @@ _TS32_Z = (
     "float z formula), continuity-corrected z, 95% decision against "
     "the one Python-side constant. Exactness: S and the 18x variance "
     "are pure integer sums in HUGEINT/DECIMAL(38,0); z is a single "
-    "shared float expression over them. Scale: the pair space is the "
-    "CALENDAR-BOUNDED spine squared (~9k points/year -> ~40M sign "
-    "evaluations, a broadcast-nested-loop over a frame that fits in "
-    "one executor page — never row-scale; the fact table contributes "
-    "ONE hourly groupBy).",
+    "shared float expression over them. Spark side: the spine points "
+    "become (t, x) Kendall cells and S = concordant - discordant comes "
+    "from a53's `_kendall_pair_counts` (two window suffix-sums over the "
+    "densified t x value grid, no pair join), with the tie term and "
+    "18x variance from the Mann-Kendall finish ts34 shares. Scale: "
+    "the grid is the CALENDAR-BOUNDED spine times its distinct hourly "
+    "counts — never row-scale; the fact table contributes ONE hourly "
+    "groupBy.",
     tags=("timeseries", "statistics", "trend"),
 )
 def ts32_mann_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
     sp = _hourly_spine(spark, sf_dir)
-    a = sp.select(F.col("t").alias("ta"), F.col("x").alias("xa"))
-    c = sp.select(F.col("t").alias("tc"), F.col("x").alias("xc"))
-    dec = "decimal(38,0)"
-    s = (
-        a.join(F.broadcast(c), F.col("ta") < F.col("tc"))
-        .agg(
-            F.sum(
-                F.expr(
-                    "CASE WHEN xc > xa THEN 1 WHEN xc < xa THEN -1 "
-                    "ELSE 0 END"
-                ).cast(dec)
-            ).cast(dec).alias("s_stat")
-        )
+    cells = sp.select(
+        F.col("t").alias("xv"), F.col("x").alias("yv"), F.lit(1).alias("c")
     )
-    ties = (
-        sp.groupBy("x")
-        .agg(F.count(F.lit(1)).alias("tk"))
-        .agg(
-            F.sum(
-                F.expr(f"CAST(tk AS {dec}) * (tk - 1) * (2 * tk + 5)")
-            ).cast(dec).alias("tie_term")
-        )
-    )
-    v = sp.agg(F.count(F.lit(1)).alias("n"))
-    f = (
-        s.crossJoin(F.broadcast(ties))
-        .crossJoin(F.broadcast(v))
-        .select(
-            "n",
-            "s_stat",
-            F.expr(
-                f"CAST(n AS {dec}) * (n - 1) * (2 * n + 5) - tie_term"
-            ).alias("var18"),
-        )
-    )
+    f = _mann_kendall(cells)
+    # z over the exact DECIMAL S and variance, as the oracle's HUGEINTs
     return f.select(
         F.col("n").cast("long").alias("n_points"),
         F.col("s_stat").cast("long").alias("s_stat"),
@@ -3860,10 +3783,6 @@ def ts33_windowed_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ts34: Mann-Kendall trend test (round 15)
 # ---------------------------------------------------------------------------
 
-from apache_iceberg_spark.operators.analytics import (  # noqa: E402
-    _A53_ORACLE_CORE,
-)
-
 #: S>0 gets the -1 continuity correction, S<0 the +1 (Mann-Kendall's
 #: normal approximation); one shared float recipe over exact integers
 #: so both engines agree bitwise.
@@ -3920,10 +3839,6 @@ _TS34_Z = (
     tags=("timeseries", "statistics"),
 )
 def ts34_mann_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from apache_iceberg_spark.operators.analytics import (
-        _kendall_pair_counts,
-    )
-
     e = load_table(spark, sf_dir, "events")
     daily = (
         e.groupBy(
@@ -3943,28 +3858,41 @@ def ts34_mann_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
         .persist()  # plan-cache: the pair counts re-derive the cell
         # frame five ways (released via release_plan_caches)
     )
-    k = _kendall_pair_counts(cells)
-    tie3 = (
+    # the oracle casts S and the variance to BIGINT before its z
+    s = _mann_kendall(cells).select(
+        F.col("n").alias("n_days"),
+        F.col("s_stat").cast("long").alias("s_stat"),
+        F.col("var18").cast("long").alias("var_s18"),
+    )
+    return s.select("*", F.expr(_TS34_Z).alias("z"))
+
+
+def _mann_kendall(cells: DataFrame) -> DataFrame:
+    """The Mann-Kendall finish shared by ts32 and ts34 over Kendall
+    cells ``(xv = time, yv = value, c)``: one row ``(n, s_stat, var18)``
+    with S = concordant - discordant pairs from _kendall_pair_counts and
+    the 18x tie-corrected variance n(n-1)(2n+5) - sum t(t-1)(2t+5) over
+    the value ties (time points are unique, so only value ties apply).
+    S and the variance are exact DECIMAL(38,0); each caller applies its
+    own float z."""
+    ties = (
         cells.groupBy("yv")
-        .agg(F.sum("c").alias("cy"))
+        .agg(F.sum("c").alias("tk"))
         .agg(
             F.coalesce(
                 F.sum(
                     F.expr(
-                        "CAST(cy AS DECIMAL(38,0)) * (cy - 1)"
-                        " * (2 * cy + 5)"
+                        "CAST(tk AS DECIMAL(38,0)) * (tk - 1) * (2 * tk + 5)"
                     )
                 ),
                 F.lit(0),
-            ).cast("long").alias("ty3")
+            ).alias("tie_term")
         )
     )
-    s = k.crossJoin(F.broadcast(tie3)).select(
-        F.col("n").alias("n_days"),
-        (F.col("conc") - F.col("disc")).cast("long").alias("s_stat"),
+    return _kendall_pair_counts(cells).crossJoin(F.broadcast(ties)).select(
+        "n",
+        (F.col("conc") - F.col("disc")).alias("s_stat"),
         F.expr(
-            "CAST(CAST(n AS DECIMAL(38,0)) * (n - 1) * (2 * n + 5)"
-            " - ty3 AS BIGINT)"
-        ).alias("var_s18"),
+            "CAST(n AS DECIMAL(38,0)) * (n - 1) * (2 * n + 5) - tie_term"
+        ).alias("var18"),
     )
-    return s.select("*", F.expr(_TS34_Z).alias("z"))

@@ -122,6 +122,58 @@ def test_streaming_matches_batch(spark):
     assert got == want and len(got) > 0
 
 
+#: Stream query -> the batch query whose oracle it reuses verbatim.
+_STREAM_TWINS = {
+    "st10_stream_time_weighted_avg": "ts6_time_weighted_avg",
+    "st13_stream_index_update": "ann14_incremental_index_update",
+    "st14_stream_ewma": "ts10_ewma",
+    "st15_stream_cusum": "ts13_cusum_changepoint",
+    "st17_stream_seasonal_scoring": "ts14_seasonal_anomalies",
+    "st18_stream_m4_downsample": "ts16_m4_downsample",
+    "st21_stream_seasonal_profile": "ts23_seasonal_strength",
+    "st22_stream_changepoint": "ts25_cusum_changepoint",
+    "st25_stream_periodogram": "ts28_periodogram",
+    "st26_stream_bootstrap_ci": "a43_poisson_bootstrap_ci",
+    "st27_stream_median_ci": "a44_median_ci",
+    "st29_stream_page_hinkley": "ts31_page_hinkley",
+    "st31_stream_mutual_information": "a45_mutual_information",
+    "st32_stream_jsd_drift": "a47_js_divergence",
+    "st34_stream_bloom_build": "dd25_bloom_filter_gate",
+}
+
+
+def test_stream_oracles_bind_at_declaration():
+    """Importing ONLY the streaming module (fresh interpreter, no
+    registry loader) leaves every st* query with its oracle, and each
+    stream twin carries exactly its batch twin's oracle string — the
+    oracle is bound at @register, never patched into the registry
+    afterwards."""
+    import json
+    import subprocess
+    import sys
+
+    code = (
+        "import json\n"
+        "import apache_iceberg_spark.streaming.events\n"
+        "from apache_iceberg_spark.registry import REGISTRY\n"
+        "print(json.dumps({k: q.oracle for k, q in REGISTRY.items()}))\n"
+    )
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    out = subprocess.run(
+        [sys.executable, "-c", code],
+        cwd=repo,
+        capture_output=True,
+        text=True,
+        check=True,
+    )
+    oracles = json.loads(out.stdout.strip().splitlines()[-1])
+    streams = {k: v for k, v in oracles.items() if k.startswith("st")}
+    assert len(streams) == 38, sorted(streams)
+    assert [k for k, v in streams.items() if v is None] == []
+    for st, batch in _STREAM_TWINS.items():
+        assert oracles[st] == oracles[batch], st
+
+
 def test_schema_evolution_merge_read(spark, tmp_path):
     """Schema evolution on the storage layout (SURVEY.md §1.3: the
     reference documents evolution as an Iceberg capability but never

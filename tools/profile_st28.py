@@ -42,7 +42,10 @@ from apache_iceberg_spark.operators.dedup import (
     JACCARD_THRESHOLD,
     _minhash_bands,
 )
-from apache_iceberg_spark.streaming.events import _write_ordered_range_files
+from apache_iceberg_spark.streaming.events import (
+    _write_ordered_range_files,
+    run_file_replay,
+)
 from apache_iceberg_spark.tables import load_table_parallel
 
 T0 = time.time()
@@ -141,16 +144,7 @@ def gate(batch_df, batch_id):
     mark(f"batch {batch_id} total {time.time()-tb:.3f}")
 
 
-query = (
-    spark.readStream.schema(batch_docs.schema)
-    .option("maxFilesPerTrigger", "1")
-    .parquet(src)
-    .writeStream.foreachBatch(gate)
-    .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_"))
-    .trigger(availableNow=True)
-    .start()
-)
-query.awaitTermination()
+run_file_replay(spark, batch_docs.schema, src, gate)
 mark("stream done")
 n = spark.read.parquet(outdir).count()
 mark(f"final read ({n} rows)")
